@@ -20,7 +20,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *    new versioned snapshot `shingle_df/v=<batchId>`. At 100 TB the
   *    snapshot would be bucketed by shingle so the merge is co-located
   *    and only touched buckets rewrite (the StreamingRiver
-  *    `upsertBatchPartitioned` layout); the versioned-snapshot form
+  *    `upsert` layout with `buckets > 1`); the versioned-snapshot form
   *    keeps the same additive math with simpler commit semantics.
   *  - `minhash_bands`: the banded signature table is APPEND-ONLY for an
   *    append-only corpus — each ingest batch writes its bands under

@@ -1,8 +1,14 @@
 package graft.river
 
+import java.io.FileNotFoundException
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.types.StructType
+
+import graft.util.SwapCommit
 
 /** Structured Streaming form of the river (SURVEY §2 group 1): the
   * reference's poll loop (`HBaseParser.run:50` — scan past the
@@ -12,182 +18,151 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * each micro-batch only ever sees new rows, exactly-once per batch id.
   *
   * The sink is a parquet "index": a snapshot holding the latest doc per
-  * key (ES upsert semantics). `upsertBatch` merges a micro-batch into
-  * it with one `latestPerKey` pass over `existing ∪ batch`; at scale
-  * the same merge runs against a partitioned/bucketed index so only
-  * touched partitions rewrite.
+  * key (ES upsert semantics). [[upsert]] merges a micro-batch into it
+  * with one `latestPerKey` pass over `existing ∪ batch`; with
+  * `buckets > 1` the same merge runs against a key-bucketed index so
+  * only touched buckets rewrite.
   */
 object StreamingRiver {
 
-  /** Merge one (micro-)batch into the parquet index, last write wins.
-    * Crash-safe swap: the new snapshot is fully written to a staging
-    * dir, the old index is renamed aside (never deleted while it is the
-    * only copy), the staging becomes the index, then the old copy is
-    * dropped — at every instant either the index or its `__old` backup
-    * exists, and a restarted batch re-merges from whichever survived. */
   /** customMapping analogue: conform every batch to the declared sink
     * schema (project + cast) before merging, so the index's schema is
-    * the declared one — not whatever the source scan inferred. */
-  private def conform(rawBatch: DataFrame, cfg: RiverConfig): DataFrame =
+    * the declared one — not whatever the source scan inferred. A delete
+    * flag the DDL does not declare is kept, after the declared columns. */
+  private def conform(rawBatch: DataFrame, cfg: RiverConfig,
+      deleteCol: Option[String]): DataFrame =
     cfg.sinkSchemaDdl match {
       case Some(ddl) =>
-        val schema = org.apache.spark.sql.types.StructType.fromDDL(ddl)
-        rawBatch.select(schema.fields.toSeq.map(f => col(f.name).cast(f.dataType)): _*)
+        val schema = StructType.fromDDL(ddl)
+        val flag = deleteCol.filterNot(schema.fieldNames.contains).map(col)
+        rawBatch.select(schema.fields.toSeq.map(f => col(f.name).cast(f.dataType)) ++ flag: _*)
       case None => rawBatch
     }
 
-  def upsertBatch(rawBatch: DataFrame, cfg: RiverConfig, seqCol: String): Unit = {
-    val batch = conform(rawBatch, cfg)
-    val spark = batch.sparkSession
-    val index = new org.apache.hadoop.fs.Path(cfg.sinkPath)
-    val fs = index.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val staging = new org.apache.hadoop.fs.Path(cfg.sinkPath + "__staging")
-    val old = new org.apache.hadoop.fs.Path(cfg.sinkPath + "__old")
-    // recover: a crash after the rename-aside leaves only __old
-    if (!fs.exists(index) && fs.exists(old)) fs.rename(old, index)
-    val merged =
-      if (fs.exists(index))
-        River.latestPerKey(spark.read.parquet(cfg.sinkPath).unionByName(batch),
-          cfg.keyCol, cfg.tsCol, seqCol)
-      else River.latestPerKey(batch, cfg.keyCol, cfg.tsCol, seqCol)
-    merged.write.mode("overwrite").parquet(staging.toString)
-    fs.delete(old, true)
-    if (fs.exists(index)) fs.rename(index, old)
-    fs.rename(staging, index)
-    fs.delete(old, true)
-  }
-
-  /** CDC upsert with DELETE tombstones — the streaming twin of the
-    * reference's delete-old step (HBaseRiver.java:176-180 removes
-    * vanished keys; a change stream spells the same fact as delete
-    * markers): rows whose `deleteCol` is true are tombstones, and
-    * RECENCY decides — a tombstone deletes its key only while it is the
-    * key's latest record; a stale tombstone arriving after a newer
-    * upsert must not delete, and a reinsert after a delete restores.
+  /** Merge one (micro-)batch into the parquet index at `cfg.sinkPath`,
+    * last write wins per key (`River.latestPerKey` over index ∪ batch).
+    * Every batch is first conformed to `cfg.sinkSchemaDdl`.
     *
-    * The index STORES tombstones (flag column intact): forgetting them
-    * at merge would let a late-arriving older record resurrect a
-    * deleted key. Readers go through [[liveIndex]] (filters the flag);
-    * compacting tombstones older than the late-data horizon is the
-    * maintenance step, exactly like any watermark. Same staging +
-    * rename-aside crash discipline as [[upsertBatch]]. */
-  def upsertBatchWithDeletes(batch: DataFrame, cfg: RiverConfig,
-      seqCol: String, deleteCol: String): Unit = {
-    require(batch.columns.contains(deleteCol), s"batch lacks $deleteCol")
+    * Layout, chosen by `buckets`:
+    *  - `buckets = 1`: a flat index, rewritten whole per batch and
+    *    committed with one [[graft.util.SwapCommit]] (staging dir
+    *    `<sinkPath>__staging`, backup `<sinkPath>__old`).
+    *  - `buckets > 1`: the index is hash-partitioned on the key into
+    *    `kbucket=pmod(hash(key), buckets)` directories and a batch
+    *    rewrites ONLY the buckets its keys fall in — the reference's bulk
+    *    upsert touches only the batch's docs (HBaseParser.java:135-159).
+    *    Untouched buckets are not opened, not read, not rewritten. Each
+    *    touched bucket is one [[graft.util.SwapCommit]] (backup
+    *    `.kbucket_old_<b>`, dot-prefixed so Spark readers skip it); a
+    *    crash between buckets leaves some buckets new and some old, and
+    *    the replayed batch converges them (each bucket's merge is
+    *    idempotent). Recovery lists the index root once.
+    *
+    * An index whose layout does not match `buckets` fails the upsert:
+    * flat files under a bucketed upsert, `kbucket=` directories under a
+    * flat one, or a `kbucket=b` directory with `b ≥ buckets`. A bucket
+    * count that grows while every existing bucket stays below it is NOT
+    * detected — keys would then be looked up in the wrong bucket, so
+    * changing `buckets` needs a rebuild of the index. `kbucket` is a
+    * reserved column name: a flat index holding it reads as bucketed.
+    *
+    * CDC with DELETE tombstones — the streaming twin of the reference's
+    * delete-old step (HBaseRiver.java:176-180 removes vanished keys; a
+    * change stream spells the same fact as delete markers): with
+    * `deleteCol`, rows whose flag is true are tombstones, and RECENCY
+    * decides — a tombstone deletes its key only while it is the key's
+    * latest record; a stale tombstone arriving after a newer upsert must
+    * not delete, and a reinsert after a delete restores. The index
+    * STORES tombstones (flag column intact): forgetting them at merge
+    * would let a late-arriving older record resurrect a deleted key.
+    * Readers go through [[liveIndex]] (filters the flag); compacting
+    * tombstones older than the late-data horizon is the maintenance
+    * step, exactly like any watermark. */
+  def upsert(rawBatch: DataFrame, cfg: RiverConfig, seqCol: String,
+      buckets: Int = 1, deleteCol: Option[String] = None): Unit = {
+    require(buckets > 0, s"buckets must be positive, got $buckets")
+    deleteCol.foreach(d => require(rawBatch.columns.contains(d), s"batch lacks $d"))
+    val batch = conform(rawBatch, cfg, deleteCol)
     val spark = batch.sparkSession
-    val index = new org.apache.hadoop.fs.Path(cfg.sinkPath)
-    val fs = index.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val staging = new org.apache.hadoop.fs.Path(cfg.sinkPath + "__staging")
-    val old = new org.apache.hadoop.fs.Path(cfg.sinkPath + "__old")
-    if (!fs.exists(index) && fs.exists(old)) fs.rename(old, index)
-    val merged =
-      if (fs.exists(index))
-        River.latestPerKey(spark.read.parquet(cfg.sinkPath).unionByName(batch),
-          cfg.keyCol, cfg.tsCol, seqCol)
-      else River.latestPerKey(batch, cfg.keyCol, cfg.tsCol, seqCol)
-    merged.write.mode("overwrite").parquet(staging.toString)
-    fs.delete(old, true)
-    if (fs.exists(index)) fs.rename(index, old)
-    fs.rename(staging, index)
-    fs.delete(old, true)
+    val root = new Path(cfg.sinkPath)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val staging = new Path(cfg.sinkPath + "__staging")
+    def merge(existing: Option[DataFrame], rows: DataFrame): DataFrame =
+      River.latestPerKey(existing.fold(rows)(_.unionByName(rows)),
+        cfg.keyCol, cfg.tsCol, seqCol)
+    def mismatch(found: String): Nothing = {
+      val asked =
+        if (buckets == 1) "the flat layout"
+        else s"the kbucket= layout with buckets 0..${buckets - 1}"
+      throw new IllegalStateException(s"index ${cfg.sinkPath} has $found, but " +
+        s"buckets = $buckets asks for $asked; rebuild the index to change its layout")
+    }
+
+    if (buckets == 1) {
+      val old = new Path(cfg.sinkPath + "__old")
+      val existing =
+        if (SwapCommit.restore(fs, root, old)) Some(spark.read.parquet(cfg.sinkPath))
+        else None
+      // kbucket= directories surface as a partition column
+      if (existing.exists(_.columns.contains("kbucket")))
+        mismatch("the kbucket= (bucketed) layout")
+      merge(existing, batch).write.mode("overwrite").parquet(staging.toString)
+      SwapCommit(fs, staging, root, old)
+    } else {
+      def live(b: Int) = new Path(root, s"kbucket=$b")
+      def bak(b: Int) = new Path(root, s".kbucket_old_$b")
+      val Live = "kbucket=(\\d+)".r
+      val Bak = "\\.kbucket_old_(\\d+)".r
+      val names =
+        try fs.listStatus(root).map(_.getPath.getName).toSet
+        catch { case _: FileNotFoundException => Set.empty[String] }
+      if (names.exists(n => !n.startsWith("_") && !n.startsWith(".") && !n.startsWith("kbucket=")))
+        mismatch("the flat layout")
+      val liveBuckets = names.collect { case Live(b) => b.toInt }
+      // a crash between a bucket's rename-aside and rename-into-place
+      // left only its backup
+      val orphans = names.collect { case Bak(b) if !liveBuckets(b.toInt) => b.toInt }
+      orphans.foreach(b => SwapCommit.restore(fs, live(b), bak(b)))
+      val present = liveBuckets ++ orphans
+      present.find(_ >= buckets).foreach(b => mismatch(s"bucket directory kbucket=$b"))
+      val bucketed = batch.withColumn("kbucket", pmod(hash(col(cfg.keyCol)), lit(buckets)))
+      val touched = bucketed.select("kbucket").distinct()
+        .collect().map(_.getInt(0)).sorted
+      if (touched.nonEmpty) {
+        // kbucket is a partition column → this filter prunes directories:
+        // untouched buckets are never opened
+        val existing =
+          if (present.isEmpty) None
+          else Some(spark.read.parquet(cfg.sinkPath)
+            .filter(col("kbucket").isin(touched.map(Integer.valueOf).toSeq: _*)))
+        merge(existing, bucketed)
+          .write.partitionBy("kbucket").mode("overwrite").parquet(staging.toString)
+        fs.mkdirs(root)
+        touched.foreach(b => SwapCommit(fs, new Path(staging, s"kbucket=$b"), live(b), bak(b)))
+        fs.delete(staging, true)
+      }
+    }
   }
 
   /** The live view of a tombstone-carrying index: rows whose delete
-    * flag is false. The tombstones stay on disk (see
-    * [[upsertBatchWithDeletes]]); this is the read every consumer
-    * takes. */
-  def liveIndex(spark: org.apache.spark.sql.SparkSession, cfg: RiverConfig,
+    * flag is false. The tombstones stay on disk (see [[upsert]]); this
+    * is the read every consumer takes. */
+  def liveIndex(spark: SparkSession, cfg: RiverConfig,
       deleteCol: String): DataFrame =
     spark.read.parquet(cfg.sinkPath).filter(!col(deleteCol)).drop(deleteCol)
 
-  /** Streaming CDC import with deletes: change stream → foreachBatch
-    * tombstone-aware upsert ([[upsertBatchWithDeletes]]). */
-  def runWithDeletes(changes: DataFrame, cfg: RiverConfig,
-      checkpointDir: String, seqCol: String = "event_id",
-      deleteCol: String = "deleted"): StreamingQuery =
-    changes.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        upsertBatchWithDeletes(batch, cfg, seqCol, deleteCol)
-      }
-      .start()
-
-  /** Partition-pruned upsert: the index is hash-partitioned on the key
-    * (`kbucket=pmod(hash(key), nBuckets)` directories) and a micro-batch
-    * rewrites ONLY the buckets its keys fall in — the reference's bulk
-    * upsert touches only the batch's docs (HBaseParser.java:135-159);
-    * here a batch touching 2 of 256 buckets reads and rewrites 2/256 of
-    * the index instead of all of it. Untouched bucket directories are
-    * not opened, not read, not rewritten — byte-identical after the
-    * batch.
-    *
-    * Crash-safe per-bucket swap: merged buckets are fully written to a
-    * staging dir first, then each touched bucket is renamed aside (to a
-    * dot-prefixed name Spark readers ignore) and replaced; at every
-    * instant each bucket exists either under its live or its backup
-    * name, and the next batch restores any backup a crash left behind.
-    *
-    * Scale: `touched` is bounded by nBuckets (driver-side metadata, not
-    * data); the existing-side read prunes partitions via the kbucket
-    * filter; the merge shuffles only touched-bucket rows. */
-  def upsertBatchPartitioned(rawBatch: DataFrame, cfg: RiverConfig,
-      seqCol: String, nBuckets: Int = 32): Unit = {
-    require(nBuckets > 0)
-    val batch = conform(rawBatch, cfg)
-    val spark = batch.sparkSession
-    val index = new org.apache.hadoop.fs.Path(cfg.sinkPath)
-    val fs = index.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def live(b: Int) = new org.apache.hadoop.fs.Path(s"${cfg.sinkPath}/kbucket=$b")
-    def bak(b: Int) = new org.apache.hadoop.fs.Path(s"${cfg.sinkPath}/.kbucket_old_$b")
-    // recover any bucket a crash left renamed-aside
-    if (fs.exists(index)) (0 until nBuckets).foreach { b =>
-      if (!fs.exists(live(b)) && fs.exists(bak(b))) fs.rename(bak(b), live(b))
-    }
-    val bucketed = batch.withColumn("kbucket",
-      pmod(hash(col(cfg.keyCol)), lit(nBuckets)))
-    val touched = bucketed.select("kbucket").distinct()
-      .collect().map(_.getInt(0)).sorted
-    if (touched.isEmpty) return
-    val hasIndex = fs.exists(index) &&
-      (0 until nBuckets).exists(b => fs.exists(live(b)))
-    val merged =
-      if (hasIndex) {
-        // kbucket is a partition column → this filter prunes directories:
-        // untouched buckets are never opened
-        val existingTouched = spark.read.parquet(cfg.sinkPath)
-          .filter(col("kbucket").isin(touched.map(Integer.valueOf).toSeq: _*))
-        River.latestPerKey(existingTouched.unionByName(bucketed),
-          cfg.keyCol, cfg.tsCol, seqCol)
-      } else River.latestPerKey(bucketed, cfg.keyCol, cfg.tsCol, seqCol)
-    val staging = new org.apache.hadoop.fs.Path(cfg.sinkPath + "__staging")
-    fs.delete(staging, true)
-    merged.write.partitionBy("kbucket").mode("overwrite").parquet(staging.toString)
-    fs.mkdirs(index)
-    touched.foreach { b =>
-      val stagedBucket = new org.apache.hadoop.fs.Path(s"$staging/kbucket=$b")
-      if (fs.exists(stagedBucket)) {
-        fs.delete(bak(b), true)
-        if (fs.exists(live(b))) fs.rename(live(b), bak(b))
-        fs.rename(stagedBucket, live(b))
-        fs.delete(bak(b), true)
-      }
-    }
-    fs.delete(staging, true)
-  }
-
-  /** The streaming import: events stream → normalize/project → upsert
-    * into the index per micro-batch. */
+  /** The streaming import: events stream → normalize/project → [[upsert]]
+    * into the index per micro-batch (`buckets` and `deleteCol` as there). */
   def run(events: DataFrame, cfg: RiverConfig, checkpointDir: String,
-      seqCol: String = "event_id", sinkBuckets: Int = 0): StreamingQuery = {
+      seqCol: String = "event_id", buckets: Int = 1,
+      deleteCol: Option[String] = None): StreamingQuery = {
     val projected = cfg.family match {
       case Some(f) => events.filter(col("event_type") === f)
       case None => events
     }
     val selected =
       if (cfg.qualifiers.nonEmpty)
-        projected.select((cfg.keyCol +: cfg.tsCol +: cfg.qualifiers)
+        projected.select(((cfg.keyCol +: cfg.tsCol +: cfg.qualifiers) ++ deleteCol)
           .distinct.map(col): _*)
       else projected
     selected.writeStream
@@ -195,10 +170,24 @@ object StreamingRiver {
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (sinkBuckets > 0) upsertBatchPartitioned(batch, cfg, seqCol, sinkBuckets)
-        else upsertBatch(batch, cfg, seqCol)
+        upsert(batch, cfg, seqCol, buckets, deleteCol)
       }
       .start()
+  }
+
+  /** Drain a bounded stream (AvailableNow: every available row, then
+    * stop) into the in-memory table `queryName` and return that table. */
+  private def drainToMemory(spark: SparkSession, stream: DataFrame, mode: OutputMode,
+      queryName: String, checkpointDir: String): DataFrame = {
+    stream.writeStream
+      .outputMode(mode)
+      .option("checkpointLocation", checkpointDir)
+      .trigger(Trigger.AvailableNow())
+      .format("memory")
+      .queryName(queryName)
+      .start()
+      .awaitTermination()
+    spark.table(queryName)
   }
 
   /** Streaming tumbling-window aggregation with a watermark — the
@@ -239,22 +228,14 @@ object StreamingRiver {
   /** Run the stateful latest-per-key over a bounded stream into an
     * in-memory sink and return the final per-key winners. */
   def runLatestToMemory(spark: SparkSession, events: DataFrame, keyCol: String,
-      seqCol: String, queryName: String, checkpointDir: String): DataFrame = {
-    val q = latestPerKeyStateful(events, keyCol, seqCol).writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .format("memory")
-      .queryName(queryName)
-      .start()
-    q.awaitTermination()
+      seqCol: String, queryName: String, checkpointDir: String): DataFrame =
     // Update-mode memory sink appends one row per key per batch; the
     // final state per key is the last emission
-    spark.table(queryName)
+    drainToMemory(spark, latestPerKeyStateful(events, keyCol, seqCol), OutputMode.Update(),
+      queryName, checkpointDir)
       .groupBy("key")
       .agg(max(struct(col("ts_us"), col("seq"), col("value"))).as("w"))
       .select(col("key"), col("w.ts_us"), col("w.seq"), col("w.value"))
-  }
 
   /** Streaming exact dedup: drop repeats of a key within the watermark
     * horizon — the streaming twin of dedup_exact, with state that ages
@@ -301,63 +282,30 @@ object StreamingRiver {
   /** Run the interval join over a bounded stream into an in-memory sink. */
   def runIntervalJoinToMemory(spark: SparkSession, events: DataFrame,
       leftType: String, rightType: String, intervalSec: Long,
-      queryName: String, checkpointDir: String): DataFrame = {
-    val q = intervalJoin(events, leftType, rightType, intervalSec, "10 seconds")
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .format("memory")
-      .queryName(queryName)
-      .start()
-    q.awaitTermination()
-    spark.table(queryName)
-  }
+      queryName: String, checkpointDir: String): DataFrame =
+    drainToMemory(spark, intervalJoin(events, leftType, rightType, intervalSec, "10 seconds"),
+      OutputMode.Append(), queryName, checkpointDir)
 
   /** Run the streaming dedup over a bounded stream into an in-memory
     * sink and return the emitted (deduped) rows. */
   def runDedupToMemory(spark: SparkSession, events: DataFrame, keyCols: Seq[String],
-      queryName: String, checkpointDir: String): DataFrame = {
-    val q = streamingDedup(events, keyCols, "10 seconds").writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .format("memory")
-      .queryName(queryName)
-      .start()
-    q.awaitTermination()
-    spark.table(queryName)
-  }
+      queryName: String, checkpointDir: String): DataFrame =
+    drainToMemory(spark, streamingDedup(events, keyCols, "10 seconds"), OutputMode.Append(),
+      queryName, checkpointDir)
 
   /** Run the streaming sessionization over a bounded stream into an
     * in-memory sink; append mode emits each session once it closes. */
   def runSessionsToMemory(spark: SparkSession, events: DataFrame, gap: String,
-      queryName: String, checkpointDir: String): DataFrame = {
-    val q = sessionWindows(events, gap, "10 seconds").writeStream
-      .outputMode("complete")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .format("memory")
-      .queryName(queryName)
-      .start()
-    q.awaitTermination()
-    spark.table(queryName)
-  }
+      queryName: String, checkpointDir: String): DataFrame =
+    drainToMemory(spark, sessionWindows(events, gap, "10 seconds"), OutputMode.Complete(),
+      queryName, checkpointDir)
 
   /** Run the windowed aggregation over a bounded stream into an
     * in-memory sink and return the completed result. */
   def runWindowedToMemory(spark: SparkSession, events: DataFrame,
-      windowLen: String, queryName: String, checkpointDir: String): DataFrame = {
-    val q = windowedCounts(events, windowLen, "10 seconds").writeStream
-      .outputMode("complete")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .format("memory")
-      .queryName(queryName)
-      .start()
-    q.awaitTermination()
-    spark.table(queryName)
-  }
+      windowLen: String, queryName: String, checkpointDir: String): DataFrame =
+    drainToMemory(spark, windowedCounts(events, windowLen, "10 seconds"), OutputMode.Complete(),
+      queryName, checkpointDir)
 
   /** Trending terms (round 13) — the streaming "what is being written
     * about RIGHT NOW" surface ES dashboards build from date_histogram +
@@ -380,17 +328,9 @@ object StreamingRiver {
   /** Run trending terms over a bounded stream into an in-memory sink
     * (complete mode) and return every (window, term, n) row. */
   def runTrendingToMemory(spark: SparkSession, docStream: DataFrame,
-      windowLen: String, queryName: String, checkpointDir: String): DataFrame = {
-    val q = trendingTerms(docStream, windowLen, "10 seconds").writeStream
-      .outputMode("complete")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .format("memory")
-      .queryName(queryName)
-      .start()
-    q.awaitTermination()
-    spark.table(queryName)
-  }
+      windowLen: String, queryName: String, checkpointDir: String): DataFrame =
+    drainToMemory(spark, trendingTerms(docStream, windowLen, "10 seconds"), OutputMode.Complete(),
+      queryName, checkpointDir)
 
   /** Streaming percolation (round 13) — the canonical ES percolator
     * deployment: registered alert queries stand, DOCUMENTS stream past
@@ -410,17 +350,9 @@ object StreamingRiver {
     * in-memory sink and return every emitted match. */
   def runPercolateToMemory(spark: SparkSession, docStream: DataFrame,
       queries: Seq[(String, graft.text.BoolDsl.Query)],
-      queryName: String, checkpointDir: String): DataFrame = {
-    val q = streamingPercolate(docStream, queries).writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .format("memory")
-      .queryName(queryName)
-      .start()
-    q.awaitTermination()
-    spark.table(queryName)
-  }
+      queryName: String, checkpointDir: String): DataFrame =
+    drainToMemory(spark, streamingPercolate(docStream, queries), OutputMode.Append(),
+      queryName, checkpointDir)
 
   /** Per-key running sums for the streaming anomaly detector — EXACT
     * integer state (value is 2-decimal money: cents = round(100·v) is
@@ -482,17 +414,9 @@ object StreamingRiver {
     * sink and return every emitted alert. */
   def runAnomaliesToMemory(spark: SparkSession, events: DataFrame,
       k: Double, minN: Long, queryName: String,
-      checkpointDir: String): DataFrame = {
-    val q = anomalies(events, k, minN).writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .format("memory")
-      .queryName(queryName)
-      .start()
-    q.awaitTermination()
-    spark.table(queryName)
-  }
+      checkpointDir: String): DataFrame =
+    drainToMemory(spark, anomalies(events, k, minN), OutputMode.Append(),
+      queryName, checkpointDir)
 
   /** STREAMING RELEASE GATE (r15 continuation — the batch release
     * chain's ingest-time form: documents pass the gate as they arrive
@@ -551,33 +475,17 @@ object StreamingRiver {
   /** Run the streaming mask planner over a bounded doc stream into an
     * in-memory sink and return every emitted plan row. */
   def runMaskPlannerToMemory(spark: SparkSession, docStream: DataFrame,
-      queryName: String, checkpointDir: String): DataFrame = {
-    val q = streamingMaskPlanner(docStream).writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .format("memory")
-      .queryName(queryName)
-      .start()
-    q.awaitTermination()
-    spark.table(queryName)
-  }
+      queryName: String, checkpointDir: String): DataFrame =
+    drainToMemory(spark, streamingMaskPlanner(docStream), OutputMode.Append(),
+      queryName, checkpointDir)
 
   /** Run the streaming release gate over a bounded doc stream into an
     * in-memory sink and return every released row. */
   def runReleaseGateToMemory(spark: SparkSession, docStream: DataFrame,
       benchGrams: DataFrame, n: Int, queryName: String,
-      checkpointDir: String): DataFrame = {
-    val q = streamingReleaseGate(docStream, benchGrams, n).writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .format("memory")
-      .queryName(queryName)
-      .start()
-    q.awaitTermination()
-    spark.table(queryName)
-  }
+      checkpointDir: String): DataFrame =
+    drainToMemory(spark, streamingReleaseGate(docStream, benchGrams, n), OutputMode.Append(),
+      queryName, checkpointDir)
 
   /** STREAMING IMPORTANCE RESAMPLING (round 18 — the at-ingest form of
     * [[graft.pipeline.Pipeline.importanceResample]]): documents are
@@ -600,16 +508,7 @@ object StreamingRiver {
   def runResampleToMemory(spark: SparkSession, docStream: DataFrame,
       targetSources: Seq[String], ct: Map[String, Long],
       ca: Map[String, Long], tTgt: Long, tAll: Long, queryName: String,
-      checkpointDir: String): DataFrame = {
-    val q = streamingResample(docStream, targetSources, ct, ca, tTgt, tAll)
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .format("memory")
-      .queryName(queryName)
-      .start()
-    q.awaitTermination()
-    spark.table(queryName)
-  }
+      checkpointDir: String): DataFrame =
+    drainToMemory(spark, streamingResample(docStream, targetSources, ct, ca, tTgt, tAll),
+      OutputMode.Append(), queryName, checkpointDir)
 }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.functions.GraftFunctions
+import graft.util.SwapCommit
 
 /** Maintained IVF index for ANN search (VERDICT r11 next #5 — the
   * [[graft.dedup.DedupIndex]] pattern applied to [[Ann.ivfTopK]]).
@@ -178,11 +179,11 @@ object AnnIndex {
     // ADVICE): mode("overwrite") directly on the ingest dir deletes
     // `_SUCCESS` + data files non-atomically, so a reader that passed
     // the committedIngests check just before the overwrite could still
-    // see a torn partition. With rename-aside (the StreamingRiver
-    // upsertBatch discipline) a reader sees a COMPLETE batch whenever
-    // it sees one at all — never a mix. Known residual window (ADVICE
-    // r15): between rename(dest → old) and rename(staging → dest) the
-    // ingest partition exists under NEITHER name, so a concurrent
+    // see a torn partition. With graft.util.SwapCommit (the river's
+    // commit routine) a reader sees a COMPLETE batch whenever it sees
+    // one at all — never a mix. Known residual window (ADVICE r15):
+    // between rename(dest → old) and rename(staging → dest) the ingest
+    // partition exists under NEITHER name, so a concurrent
     // committedIngests listing taken in that instant misses the whole
     // batch (reads the index as-of before this ingest — stale, not
     // torn). Replays re-write identical content, so staleness
@@ -196,11 +197,6 @@ object AnnIndex {
     val dest = new Path(s"${assignDir(root)}/cv=$v/ingest=$batchId")
     val staging = new Path(s"${assignDir(root)}/cv=$v/.staging-ingest-$batchId")
     val old = new Path(s"${assignDir(root)}/cv=$v/.old-ingest-$batchId")
-    val fs = hadoopFs(spark, dest.toString)
-    // recover from a crash between rename-aside and rename-into-place
-    if (!fs.exists(dest) && fs.exists(old)) fs.rename(old, dest)
-    if (fs.exists(staging)) fs.delete(staging, true)
-    if (fs.exists(old)) fs.delete(old, true)
     // versions trained with PQ (trainCentroids pqM > 0) also encode the
     // m-code PQ words at ingest — the IVFADC composition: codes ride
     // the cent_id partition files, so a probe ADC-scans probed lists
@@ -216,9 +212,7 @@ object AnnIndex {
     encoded
       .write.partitionBy("cent_id").mode("overwrite")
       .parquet(staging.toString)
-    if (fs.exists(dest)) fs.rename(dest, old)
-    fs.rename(staging, dest)
-    fs.delete(old, true)
+    SwapCommit(hadoopFs(spark, dest.toString), staging, dest, old)
   }
 
   /** The cluster-bucketed corpus across every ingested batch, with the

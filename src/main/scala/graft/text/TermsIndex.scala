@@ -26,8 +26,8 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * 1-snapshot reader grace window.
   *
   * At 100 TB the snapshot would be bucketed by term so the merge
-  * co-locates and only touched buckets rewrite (the StreamingRiver
-  * partitioned-upsert layout); the versioned form keeps the same
+  * co-locates and only touched buckets rewrite (the
+  * `StreamingRiver.upsert` layout with `buckets > 1`); the versioned form keeps the same
   * additive math with simpler commit semantics.
   */
 object TermsIndex {

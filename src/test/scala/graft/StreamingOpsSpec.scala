@@ -191,7 +191,7 @@ class StreamingOpsSpec extends SparkSpec {
     val sink = tmp("map-sink") + "/index"
     val cfg = RiverConfig(sourcePath = "", sinkPath = sink, keyCol = "user_id",
       sinkSchemaDdl = Some("user_id BIGINT, ts TIMESTAMP, event_id BIGINT, value DOUBLE"))
-    StreamingRiver.upsertBatch(events, cfg, "event_id")
+    StreamingRiver.upsert(events, cfg, "event_id")
     val idx = spark.read.parquet(sink)
     assert(idx.columns.toSeq == Seq("user_id", "ts", "event_id", "value"),
       s"sink schema not the declared one: ${idx.columns.toSeq}")

@@ -74,7 +74,7 @@ class StreamingRiverSpec extends SparkSpec {
     val cfg = RiverConfig(sourcePath = "n/a", sinkPath = sink, keyCol = "user_id")
 
     // batch 1: everything → full index across buckets
-    StreamingRiver.upsertBatchPartitioned(events, cfg, "event_id", nBuckets)
+    StreamingRiver.upsert(events, cfg, "event_id", nBuckets)
 
     val fs = new Path(sink).getFileSystem(spark.sparkContext.hadoopConfiguration)
     def fileState(): Map[String, (Long, Long)] = {
@@ -101,7 +101,7 @@ class StreamingRiverSpec extends SparkSpec {
       .select(pmod(hash(col("user_id")), lit(nBuckets)).as("b"))
       .distinct().as[Int].collect().toSet
     assert(touchedBuckets.size < nBuckets, "keys must not cover every bucket")
-    StreamingRiver.upsertBatchPartitioned(batch2, cfg, "event_id", nBuckets)
+    StreamingRiver.upsert(batch2, cfg, "event_id", nBuckets)
 
     val after = fileState()
     def bucketOf(path: String): Int =
@@ -137,7 +137,7 @@ class StreamingRiverSpec extends SparkSpec {
     val stream = spark.readStream.schema(events.schema)
       .option("maxFilesPerTrigger", "2").parquet(src)
     val cfg = RiverConfig(sourcePath = src, sinkPath = sink, keyCol = "user_id")
-    StreamingRiver.run(stream, cfg, ckpt, sinkBuckets = 8).awaitTermination()
+    StreamingRiver.run(stream, cfg, ckpt, buckets = 8).awaitTermination()
 
     val streamed = spark.read.parquet(sink)
       .select("user_id", "event_id").collect()
@@ -201,17 +201,17 @@ class StreamingRiverSpec extends SparkSpec {
     val cfg = RiverConfig(sourcePath = "unused", sinkPath = sink, keyCol = "user_id")
     def b(rows: (Long, Long, Long, Boolean)*) =
       rows.toSeq.toDF("user_id", "ts", "event_id", "deleted")
-    StreamingRiver.upsertBatchWithDeletes(
-      b((1L, 10L, 1L, false), (2L, 10L, 2L, false)), cfg, "event_id", "deleted")
-    StreamingRiver.upsertBatchWithDeletes(
+    StreamingRiver.upsert(
+      b((1L, 10L, 1L, false), (2L, 10L, 2L, false)), cfg, "event_id", deleteCol = Some("deleted"))
+    StreamingRiver.upsert(
       b((1L, 5L, 3L, true),   // stale tombstone: must NOT delete key 1
         (2L, 15L, 4L, true),  // fresh tombstone: deletes key 2
         (3L, 12L, 5L, false),
-        (4L, 15L, 6L, true)), cfg, "event_id", "deleted")
-    StreamingRiver.upsertBatchWithDeletes(
+        (4L, 15L, 6L, true)), cfg, "event_id", deleteCol = Some("deleted"))
+    StreamingRiver.upsert(
       b((2L, 20L, 7L, false),  // reinsert after delete: key 2 returns
         (4L, 9L, 8L, false)),  // LATE OLD record: stored tombstone wins
-      cfg, "event_id", "deleted")
+      cfg, "event_id", deleteCol = Some("deleted"))
     val live = StreamingRiver.liveIndex(spark, cfg, "deleted")
       .select("user_id", "event_id").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -227,9 +227,9 @@ class StreamingRiverSpec extends SparkSpec {
         (col("event_id") % 7 === 0).as("deleted"))
     changes.repartition(4).write.mode("overwrite").parquet(src)
     val cfg2 = RiverConfig(sourcePath = src, sinkPath = sink2, keyCol = "user_id")
-    StreamingRiver.runWithDeletes(
+    StreamingRiver.run(
       spark.readStream.schema(changes.schema).parquet(src), cfg2, ckpt,
-      seqCol = "event_id", deleteCol = "deleted").awaitTermination()
+      seqCol = "event_id", deleteCol = Some("deleted")).awaitTermination()
     val streamedLive = StreamingRiver.liveIndex(spark, cfg2, "deleted")
       .select("user_id", "event_id").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
