@@ -1,11 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import scala.collection.mutable
 
 /** Benchmark main: times every SparkEntry query end-to-end at
-  * SPARK_GRAFT_SF_DIR, writing each result to the `noop` sink so the
-  * full plan executes (a bare count() would let Catalyst prune the
-  * projections under test). Prints one JSON line for the driver.
+  * SPARK_GRAFT_SF_DIR through [[Harness.run]] into the `noop` sink.
+  * Prints one JSON line for the driver.
   *
   * Host-noise guard, v3. History: round 6's file was invalidated by a
   * host stall the per-query best-of-2 couldn't see; round 7 added
@@ -70,40 +68,21 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Harness.cpus
     val envRef: Option[Double] =
       sys.env.get("SPARK_GRAFT_CALIB_REF").map(_.toDouble)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS") // events copies must stay INT64 µs (hbasesim + DuckDB read them), never INT96
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", 1 << 20) // TopKPairs over corpus-cardinality keys must hash, not sort (see Dedup.embeddingNearDupIvf)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // JVM + parquet-footer warm-up so per-query times measure the query
-    Tables.names.foreach(t => Tables.load(spark, sfDir, t).count())
+    val spark = Harness.session(cpus)
+    Harness.warm(spark, sfDir)
     // optional args: run only the named queries (diagnostics; the driver
     // invokes with no args → full suite)
     val only = args.toSet
 
-    def once(name: String): Double = {
-      val fn = SparkEntry.queries(name)
-      val t0 = System.nanoTime()
-      val ok =
-        try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}"); false
-        }
-      // operators persist intermediates (and the clustering loop
-      // localCheckpoints, which clearCache does NOT reclaim); drop every
-      // persisted block so 130+ back-to-back executions don't accumulate
-      // heap pressure that bleeds into later queries' times
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
-    }
+    def once(name: String): Double =
+      Harness.run(spark, sfDir, name, Harness.noop) match {
+        case Right(secs) => secs
+        case Left(e) =>
+          System.err.println(s"[bench] $name failed: ${e.getMessage}"); -1.0
+      }
 
     def timed(name: String): Double = {
       // best of 2 (single runs are dominated by JIT/GC noise), plus a
@@ -138,7 +117,7 @@ object Bench {
     // I/O-path conditions); the BRACKET dirty rule gates on this one.
     def hostProbe(): Double = {
       val t0 = System.nanoTime()
-      spark.range(0L, 200_000_000L, 1L, cpus.toInt)
+      spark.range(0L, 200_000_000L, 1L, cpus)
         .selectExpr("sum(id)").collect()
       (System.nanoTime() - t0) / 1e9
     }
@@ -335,14 +314,14 @@ object Bench {
     def stampJson(qs: Seq[(String, Double)]): String =
       s"""{"metric":"total","value":${f3(total)},"unit":"sec","queries":${jmap(qs)},"sf":"$sfDir","calib_ref":${ref.map(f3).getOrElse("null")},$calibStats,$hostStats,"n_calibs":${calibs.size},"n_dirty":${dirtyNames.size},"dirty":$dirtyJson,"n_errored":${errored.size},"contaminated":$contaminated,"attempts":$attempts,"ref_armed":${committedRef.nonEmpty},"n_ref_outliers":${refOut.size},"ref_outliers":$refOutJson}"""
     println(stampJson(stamped))
-    // The stdout contract line above has been unparseable by the driver
-    // for 21 rounds (`parsed: null` in every BENCH_r*.json — sbt
-    // prefixes it `[info] ` and the driver keeps only the last 2000
-    // log chars). VERDICT r21 #1: ALSO write the stamp — with the FULL
-    // per-query map, which has no tail-size bound in a file — to a
-    // fixed path, so the comparison machinery (or the judge) can read
-    // it without hand-parsing log tails. Overwritten per run; the
-    // stdout line and its format are unchanged.
+    // The stdout contract line above reaches the log unprefixed:
+    // build.sbt forks `run` with `outputStrategy := StdoutOutput`
+    // (sbt's default logged output prefixed it `[info] `, which left
+    // `parsed: null` in every BENCH_r*.json). The stamp — with the
+    // FULL per-query map, which has no tail-size bound in a file — is
+    // ALSO written to a fixed path, so the comparison machinery (or
+    // the judge) can read it without parsing log tails. Overwritten
+    // per run.
     try {
       val stampPath = sys.env.getOrElse("SPARK_GRAFT_STAMP", "BENCH_STAMP.json")
       java.nio.file.Files.write(java.nio.file.Paths.get(stampPath),

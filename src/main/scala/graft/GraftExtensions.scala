@@ -8,7 +8,7 @@ import graft.functions.{CosineSimilarity, DotProduct, L2Distance}
 /** SparkSessionExtensions entry point, so a spark-submit deployment
   * picks up graft's functions with
   * `--conf spark.sql.extensions=graft.GraftExtensions`
-  * (or `SparkSession.builder.withExtensions(new GraftExtensions)`).
+  * (or a session builder's `.withExtensions(new GraftExtensions)`).
   * Programmatic sessions can equivalently call
   * `GraftFunctions.register(spark)`.
   */

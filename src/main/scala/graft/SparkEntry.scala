@@ -1287,7 +1287,8 @@ object SparkEntry {
     // the 10⁴-plus registered-query scale path (r14): same candidates,
     // per-pair evaluation by the plan-size-constant PercolatorEval
     // kernel instead of the Q-deep CASE chain (which the analyzer
-    // kills between 800 and 3000 stored queries — PercProbe)
+    // kills between 800 and 3000 stored queries — SCALING.md §Percolator
+    // at 10⁴ registered queries)
     "text_percolate_dsl_atscale" -> ((s, dir) =>
       text.BoolDsl.percolateDslIndexedAtScale(Tables.documents(s, dir), percolatorQueries)),
 

@@ -305,12 +305,18 @@ object Dedup {
     *
     * Scale shape: positional windows are a linear explode (one row per
     * token, like the shingle family); the repeat detection is a
-    * map-side-combinable (count, min-struct) agg on the md5 window
-    * key — a window repeated a million times produces ONE group row,
-    * never a self-join, so hot boilerplate cannot go quadratic (no
-    * occupancy hazard to bound here). The only windows (Spark-window,
-    * not token-window) run per-doc over the FLAGGED rows — sized by
-    * the dup volume, not the corpus. */
+    * map-side-combinable hash agg on the md5 window key — count plus a
+    * `min` over (doc_id, pos) bit-packed into one BIGINT — so a window
+    * repeated a million times produces ONE group row, never a
+    * self-join, and hot boilerplate cannot go quadratic (no occupancy
+    * hazard to bound here). The only windows (Spark-window, not
+    * token-window) run per-doc over the FLAGGED rows — sized by the dup
+    * volume, not the corpus.
+    *
+    * Bounds of that encoding: at most 2²⁰ windows per document
+    * (`pos < 2^20`) and `0 ≤ doc_id < 2^43`. A row outside either bound
+    * fails the query with an error naming its doc_id and pos; it never
+    * wraps silently. */
   def substringDedup(docs: DataFrame, k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // (doc_id, pos) rides as ONE bit-packed BIGINT (r22, guide §2.3

@@ -203,6 +203,9 @@ case class TopKPairsMulti(
     val i = id.eval(input)
     if (s != null && i != null) {
       val arr = s.asInstanceOf[ArrayData]
+      if (arr.numElements != nQ) throw new IllegalArgumentException(
+        s"top_k_pairs_multi: scores array has ${arr.numElements} elements, " +
+          s"expected one per query ($nQ)")
       val cid = i.asInstanceOf[Long]
       var q = 0
       while (q < nQ) {

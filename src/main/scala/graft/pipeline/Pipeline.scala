@@ -412,10 +412,11 @@ object Pipeline {
     // every one of them re-analyzed the full upstream logical tree
     // (injectPii → fingerprint window → MinHash signatures → …) plus
     // paid the cache-manager's canonicalized-plan lookups — measured
-    // ~2.7 s of between-job driver gaps per v3 run at sf0.01 (JobTrace,
-    // plans/r22/). A checkpointed stage boundary is a LogicalRDD leaf:
-    // same rows, same storage footprint (persist stored the frame
-    // anyway), O(1) analysis for every downstream execution. At scale
+    // ~2.7 s of between-job driver gaps per v3 run at sf0.01
+    // (`graft.Explain --jobs`, plans/r22/). A checkpointed stage
+    // boundary is a LogicalRDD leaf: same rows, same storage footprint
+    // (persist stored the frame anyway), O(1) analysis for every
+    // downstream execution. At scale
     // a release run materializes each stage as a table — this is that
     // materialization, in-session.
     val fpKeepers = fingerprintKeepers(docs, benchmarkSources)
@@ -1689,11 +1690,12 @@ object Pipeline {
     * within-cluster pair work stays ~n²/k = n^1.5 with BALANCED cells —
     * random centroids over a real (concentrated) embedding
     * distribution make hot cells, and one hot cell is quadratic
-    * (`AnnScaleProbe semdedup` measures the occupancy skew and pair
-    * counts at 10⁵). The prune itself is [[semPrune]] — identical to
-    * the hash-green frozen form, and every pruned doc is confirmed by
-    * an EXACT cosine > τ against a real lower-id cluster-mate, so the
-    * pruned set is a subset of the exact all-pairs prune at any
+    * (SCALING.md §SemDeDup centroid sources measures the occupancy
+    * skew and pair counts at 10⁵). The prune itself is [[semPrune]] —
+    * identical to the hash-green frozen form, and every pruned doc is
+    * confirmed by an EXACT cosine > τ against a real lower-id
+    * cluster-mate, so the pruned set is a subset of the exact
+    * all-pairs prune at any
     * centroid quality (spec-pinned); clustering only bounds which
     * pairs are LOOKED AT (recall), never admits a false pair.
     * Rows-only by design (Lloyd assignment is iterative argmax — the

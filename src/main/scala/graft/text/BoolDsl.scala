@@ -252,12 +252,13 @@ object BoolDsl {
 
   /** [[percolateDslIndexed]] past the CASE-chain cliff (r14): the
     * id-keyed `when` chain's plan depth grows with Q and the analyzer
-    * stack-overflows between 800 and 3000 stored queries (PercProbe);
+    * stack-overflows between 800 and 3000 stored queries (SCALING.md
+    * §Percolator at 10⁴ registered queries);
     * below the cliff each pair still pays an O(Q) id scan. Here the
     * same candidate pairs are evaluated by [[PercolatorEval]] — one
     * plan-size-constant expression carrying the query forest as a
     * JVM hash map, O(tree) per pair. Output equal to the exhaustive
-    * and chain forms (spec-pinned; PercProbe asserts it per run). */
+    * and chain forms (spec-pinned in `BoolDslSpec`). */
   def percolateDslIndexedAtScale(docs: DataFrame,
       queries: Seq[(String, Query)],
       termIndexShuffle: Boolean = false): DataFrame = {

@@ -15,10 +15,11 @@ import graft.text.BoolDsl._
   *
   * [[BoolDsl.percolateDslIndexed]] evaluates each candidate pair with a
   * query_id-keyed `when`/`otherwise` chain: plan DEPTH grows with the
-  * registered-query count, and the r14 PercProbe measured where that
-  * dies — the Column→Expression converter stack-overflows between 800
-  * and 3000 stored queries (the BpeTokenCount replace-chain failure
-  * class, this time in the analyzer's recursion rather than codegen).
+  * registered-query count, and the r14 probe (SCALING.md §Percolator
+  * at 10⁴ registered queries) measured where that dies — the
+  * Column→Expression converter stack-overflows between 800 and 3000
+  * stored queries (the BpeTokenCount replace-chain failure class,
+  * this time in the analyzer's recursion rather than codegen).
   * Even below the cliff, a pair pays an O(Q) id scan down the chain.
   *
   * This expression instead carries the compiled query FOREST behind a
@@ -28,9 +29,9 @@ import graft.text.BoolDsl._
   * the candidate's own tree per row in a JVM kernel: O(tree) per pair,
   * plan size independent of Q. Before the broadcast move the forest
   * rode `addReferenceObj` into EVERY task binary — measured OOM at
-  * 10⁵ queries × 100 leaves (PercProbe r15: 16 concurrent tasks each
-  * deserializing a multi-GB forest copy); broadcast, each executor
-  * JVM holds ONE copy.
+  * 10⁵ queries × 100 leaves (SCALING.md §Percolator term-table
+  * scaling, r15: 16 concurrent tasks each deserializing a multi-GB
+  * forest copy); broadcast, each executor JVM holds ONE copy.
   *
   * Children: query_id (string), text tokens (array<string>), then the
   * referenced string fields, then the referenced numeric fields cast

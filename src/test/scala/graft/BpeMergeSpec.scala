@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.text.Bpe
@@ -10,6 +11,39 @@ import graft.text.Bpe
   * standard sequential-pass == priority-loop BPE equivalence the kernel
   * scaladoc argues. */
 class BpeMergeSpec extends SparkSpec {
+
+  /** Deterministic well-formed merge table of size n: each side is a
+    * base char or the product of an earlier rule (the defining BPE
+    * property — also what makes sequential-pass == priority-loop). */
+  def syntheticMerges(n: Int): Seq[(String, String)] = {
+    val pool = scala.collection.mutable.ArrayBuffer[String](
+      (('a' to 'z') ++ ('0' to '9')).map(_.toString): _*)
+    (0 until n).map { i =>
+      val a = pool((i * 7 + 3) % pool.size)
+      val b = pool((i * 13 + 5) % pool.size)
+      pool += (a + b)
+      (a, b)
+    }
+  }
+
+  /** Compile an arbitrary well-formed table to the replace-chain form —
+    * the [[Bpe.compiled]] construction with a CJK symbol plane (one
+    * distinct single char per rule, outside the word alphabet). */
+  def replaceChain(merges: Seq[(String, String)], textCol: Column): Column = {
+    val sym = scala.collection.mutable.Map[String, String]()
+    val rules = merges.zipWithIndex.map { case ((a, b), i) =>
+      def of(t: String): String = if (t.length == 1) t else sym(t)
+      val s = (0x4E00 + i).toChar.toString
+      val rule = (of(a) + of(b), s)
+      sym(a + b) = s
+      rule
+    }
+    val symClass = (0x4E00 until (0x4E00 + merges.size)).map(_.toChar).mkString
+    val merged = rules.foldLeft(lower(textCol)) { case (acc, (p, s)) =>
+      replace(acc, lit(p), lit(s))
+    }
+    length(regexp_replace(merged, "[^a-z0-9'" + symClass + "]", "")).cast("long")
+  }
 
   test("kernel token counts equal the 40-rule replace chain on documents") {
     val docs = Tables.documents(spark, sfDir)
@@ -24,10 +58,10 @@ class BpeMergeSpec extends SparkSpec {
   }
 
   test("kernel equals the replace chain on a generated 300-rule table") {
-    val merges = BpeProbe.syntheticMerges(300)
+    val merges = syntheticMerges(300)
     val docs = Tables.documents(spark, sfDir)
     val diff = docs.select(
-        BpeProbe.replaceChain(merges, col("text")).as("chain"),
+        replaceChain(merges, col("text")).as("chain"),
         Bpe.tokenCountLargeVocab(spark, col("text"), merges).as("kernel"))
       .filter(col("chain") =!= col("kernel"))
     assert(diff.count() == 0)

@@ -182,9 +182,10 @@ class DfBoundSpec extends SparkSpec {
   test("join-form bound under MANY distinct hot shingles: equality holds, occupancy capped") {
     // The cardinality hazard: hundreds+ of distinct hot shingles (a
     // collected gauge would be a giant broadcast array on real text;
-    // the thousands-scale timing evidence lives in SkewAudit's `many`
-    // mode at sf0.1/×10). Pool-indexed hot runs: ~40% of docs carry a
-    // 20-token group run sized so every run shingle has df ≈ 20 > 16.
+    // the thousands-scale timing evidence lives in SCALING.md §Join-form
+    // df bound, `many` mode at sf0.1/×10). Pool-indexed hot runs: ~40%
+    // of docs carry a 20-token group run sized so every run shingle has
+    // df ≈ 20 > 16.
     val nAll = Tables.documents(spark, sfDir).count()
     val nGroups = math.max(8L, nAll * 2 / 5 / 20)
     // carrier index (bijective over doc_id%5<2 docs) mod nGroups: every

@@ -90,6 +90,20 @@ class PqAdcSpec extends SparkSpec {
     assert(a.sortBy(t => (t._1, -t._2, t._3)) == ref)
   }
 
+  test("TopKPairsMulti fails loudly on a scores array shorter or longer than the query count") {
+    import spark.implicits._
+    val queryIds = Array(0L, 1L, 2L)
+    Seq(Seq(1.0, 2.0), Seq(1.0, 2.0, 3.0, 4.0)).foreach { scores =>
+      val df = Seq((10L, scores)).toDF("id", "scores")
+      val e = intercept[Exception](
+        df.agg(TopKPairsMulti.topKAll(col("scores"), col("id"), 2, queryIds)).collect())
+      val cause = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .collectFirst { case c: IllegalArgumentException => c }
+      assert(cause.exists(c => c.getMessage.contains(s"has ${scores.size} elements") &&
+        c.getMessage.contains("(3)")), s"no length error in: $e")
+    }
+  }
+
   test("pqTopK equals the previous exploded candidate-stage form end-to-end") {
     val emb = Tables.embeddings(spark, sfDir)
     val nQueries = 10; val k = 5; val m = 16; val ks = 16
